@@ -161,7 +161,9 @@ class MatchLatticeParams:
     #   (LegacyBM25 k1+1, sloppy freq = sum of 1/(1+span width),
     #   norm-discounted + SmallFloat-quantized dl, float32 composition) —
     #   reproduces the reference's published end-to-end scores
-    #   (FIXTURES.md §6).  Doc-scan path only.
+    #   (FIXTURES.md §6).
+    # Both flavors compose on every match path (doc scan, token table,
+    # token index) through operators/bm25.py:compose_similarity.
     similarity: str = "engine"  # engine | lucene
 
     def __post_init__(self) -> None:

@@ -38,6 +38,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -50,10 +51,17 @@ from full_lattice_search_spark.config import (
     MatchLatticeParams,
 )
 from full_lattice_search_spark.functions.tokenizer import (
+    lattice_tokenize,
     text_values_col,
     tokenize_pandas,
 )
-from full_lattice_search_spark.schema import EXPLAIN_HITS_SCHEMA, HITS_SCHEMA
+from full_lattice_search_spark.operators.bm25 import (
+    _candidate_pred,
+    _flat_terms,
+    _tf_arrays,
+    compose_similarity,
+)
+from full_lattice_search_spark.schema import HITS_SCHEMA, SPAN_STATS_SCHEMA
 
 
 def analyze_query(
@@ -331,10 +339,20 @@ def _empty_hits(explain: bool, with_freq: bool = False) -> pd.DataFrame:
 _DOC_STRIDE = np.int64(1) << 40
 
 
-# Every O(docs) stats frame the composed doc-scan scoring persists is
-# tracked here so callers can scope its lifetime instead of reaching for
-# spark.catalog.clearCache() (which would evict unrelated caches too).
+# Every per-query frame persisted through ``scoped_persist`` (the composed
+# doc-scan scoring's O(docs) stats frame, the registry's candidate
+# postings) is tracked here so callers can scope its lifetime instead of
+# reaching for spark.catalog.clearCache() (which would evict unrelated
+# caches too).
 _COMPOSED_STATS_CACHE: list[DataFrame] = []
+
+
+def scoped_persist(df: DataFrame) -> DataFrame:
+    """Persist a per-query intermediate (MEMORY_AND_DISK) and register it
+    for ``composed_cache_scope`` / ``release_composed_caches``."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    _COMPOSED_STATS_CACHE.append(df)
+    return df
 
 
 @contextlib.contextmanager
@@ -360,25 +378,25 @@ def composed_cache_scope():
     try:
         yield
     finally:
-        while len(_COMPOSED_STATS_CACHE) > mark:
-            df = _COMPOSED_STATS_CACHE.pop()
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session already stopped
+        _release_from(mark)
 
 
 def release_composed_caches() -> int:
     """Unpersist every tracked composed-query stats frame (the
     non-context-manager surface).  Returns how many were released."""
+    return _release_from(0)
+
+
+def _release_from(mark: int) -> int:
+    """Unpersist the tracked frames registered after ``mark``."""
     n = 0
-    while _COMPOSED_STATS_CACHE:
+    while len(_COMPOSED_STATS_CACHE) > mark:
         df = _COMPOSED_STATS_CACHE.pop()
         try:
             df.unpersist()
             n += 1
         except Exception:
-            pass
+            pass  # session already stopped
     return n
 
 
@@ -557,16 +575,27 @@ def _unordered_matches_by_doc(
 # ---------------------------------------------------------------------------
 
 
+def _analyze(query, config: LatticeConfig, analyzer: str = "default") -> list:
+    """Analyze a text query, or a multi-phrase slot list (a list-shaped
+    query — see ``analyze_multi_phrase``)."""
+    if isinstance(query, str):
+        return analyze_query(query, config, analyzer)
+    return analyze_multi_phrase(query, config, analyzer)
+
+
 def _resolve(
     query,
     config: LatticeConfig,
     params: MatchLatticeParams,
     analyzer: str = "default",
+    phrase_prefix: bool = False,
 ):
-    if isinstance(query, str):
-        terms = analyze_query(query, config, analyzer)
-    else:
-        terms = analyze_multi_phrase(query, config, analyzer)
+    terms = _analyze(query, config, analyzer)
+    if phrase_prefix and terms and not isinstance(terms[-1], str):
+        raise ValueError(
+            "phrase_prefix needs a single-term final slot, got "
+            f"alternatives {terms[-1]!r}"
+        )
     slop = params.effective_slop(config, len(terms))
     return terms, slop
 
@@ -602,17 +631,6 @@ def analyze_multi_phrase(
     return terms
 
 
-def _flat_terms(terms: list) -> list[str]:
-    """Flatten multi-phrase slots to the candidate-term list."""
-    out: list[str] = []
-    for t in terms:
-        if isinstance(t, str):
-            out.append(t)
-        else:
-            out.extend(t)
-    return out
-
-
 def _zero_terms_hits(source: DataFrame, params: MatchLatticeParams) -> DataFrame:
     """zero_terms_query='all': every doc matches with MIN_SCORE (× boost)."""
     return source.select(
@@ -622,405 +640,83 @@ def _zero_terms_hits(source: DataFrame, params: MatchLatticeParams) -> DataFrame
     )
 
 
-def _compose_score(
+def _finish(
+    hits: DataFrame, top_k: int | None, boost: float = 1.0
+) -> DataFrame:
+    """Apply a payload-only builder ``boost`` (composed scores carry it
+    already) and the optional top-k."""
+    if boost != 1.0:
+        hits = hits.withColumn("score", F.col("score") * F.lit(boost))
+    if top_k is not None:
+        hits = hits.orderBy(F.desc("score"), "doc_id").limit(top_k)
+    return hits
+
+
+def _compose_tokens(
     hits: DataFrame,
     tokens: DataFrame,
-    terms: list[str],
-    params: MatchLatticeParams,
-    phrase_prefix: bool,
-    doclen: DataFrame | None = None,
-) -> DataFrame:
-    """A7: ``include_span_score`` — multiply the engine-native similarity
-    (BM25 over the token table) into the payload score, mirroring
-    ``LatticePayloadScoreQuery.java:333-339`` (``scoreCurrentDoc`` returns
-    ``getSpanScore() * payloadScore`` when includeSpanScore), then apply the
-    builder ``boost``.  Exposes the decomposition as ``payload_score`` /
-    ``similarity`` columns (the Explanation analog at the doc level).
-
-    The joined tables are both keyed by doc_id — an ordinary shuffle join
-    that AQE converts to broadcast when the hit list is small."""
-    from full_lattice_search_spark.operators.bm25 import bm25_scores
-
-    boost = float(params.boost)
-    sims = bm25_scores(tokens, terms, prefix_last=phrase_prefix, doclen=doclen)
-    sims = sims.withColumnRenamed("bm25", "similarity")
-    scored = (
-        hits.withColumnRenamed("score", "payload_score")
-        .join(sims, "doc_id")
-        .withColumn(
-            "score",
-            F.col("payload_score") * F.col("similarity") * F.lit(boost),
-        )
-    )
-    front = ["doc_id", "score", "n_spans", "payload_score", "similarity"]
-    rest = [c for c in scored.columns if c not in front]
-    return scored.select(*front, *rest)
-
-
-# Above this many distinct candidate tokens the idf map is no longer
-# inlined as a plan literal (driver memory / plan size); the composition
-# falls back to a relational join on the df frame.
-_MAX_IDF_LITERALS = 4096
-
-
-def _compose_from_stats_join(
-    matched: DataFrame,
-    token_df: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    boost: float,
-) -> DataFrame:
-    """Join-based twin of ``_compose_from_stats``'s literal-map fold, for
-    unbounded candidate vocabularies (short phrase_prefix on a large
-    corpus): idf stays a distributed (token, df) frame, per-doc tf entries
-    explode (≤ candidate terms per doc) and join on token — AQE picks
-    broadcast vs shuffle by the actual df-frame size.  Same formula and
-    constants; only the float64 summation order can differ."""
-    from full_lattice_search_spark.operators.bm25 import B, K1
-
-    idf_df = token_df.select(
-        "token",
-        F.log(
-            F.lit(1.0)
-            + (F.lit(float(n_docs)) - F.col("count") + F.lit(0.5))
-            / (F.col("count") + F.lit(0.5))
-        ).alias("idf"),
-    )
-    exploded = matched.select(
-        "doc_id",
-        "n_spans",
-        "payload_score",
-        F.col("dl").cast("double").alias("dl_d"),
-        F.explode(F.arrays_zip("tf_tokens", "tf_counts")).alias("z"),
-    ).select(
-        "doc_id",
-        "n_spans",
-        "payload_score",
-        "dl_d",
-        F.col("z.tf_tokens").alias("token"),
-        F.col("z.tf_counts").cast("double").alias("tf"),
-    )
-    part = F.col("idf") * (
-        F.col("tf")
-        * F.lit(K1 + 1.0)
-        / (
-            F.col("tf")
-            + F.lit(K1)
-            * (F.lit(1.0 - B) + F.lit(B) * F.col("dl_d") / F.lit(avgdl))
-        )
-    )
-    return (
-        exploded.join(idf_df, "token")
-        .groupBy("doc_id")
-        .agg(
-            F.first("n_spans").alias("n_spans"),
-            F.first("payload_score").alias("payload_score"),
-            F.sum(part).alias("similarity"),
-        )
-        .withColumn(
-            "score",
-            F.col("payload_score") * F.col("similarity") * F.lit(boost),
-        )
-        .select("doc_id", "score", "n_spans", "payload_score", "similarity")
-    )
-
-
-def _compose_from_stats(stats: DataFrame, boost: float) -> DataFrame:
-    """A7 composition from the SINGLE tokenize pass: ``stats`` is the
-    per-document output of the fused tokenize+match+stats kernel
-    (SPAN_STATS_SCHEMA) — payload-score hit fields plus the raw corpus
-    statistics (dl, per-query-term tf).  BM25 is assembled from those
-    columns with the same formula/constants as ``bm25_scores``.
-
-    Corpus statistics (n_docs, total length, per-term df — a
-    query-vocabulary-sized set) are collected by one eager tiny job over
-    the persisted stats frame and become PLAN-TIME LITERALS (an idf map),
-    so the per-doc similarity is a row-local fold over that doc's ≤|terms|
-    tf entries — no explode, no join, no aggregation shuffle.  (The HOF
-    lambda runs interpreted, but over a handful of elements per row with
-    literal-only math — not the hot-path-HOF anti-pattern, which is about
-    corpus-sized arrays re-evaluating heavy subexpressions.)
-
-    ``stats`` is consumed by the eager stats job and the final
-    projection, so the caller persists it — one materialization of one
-    row per document, O(docs) not O(tokens)."""
-    import math
-
-    from full_lattice_search_spark.operators.bm25 import B, K1
-
-    crow = stats.filter(F.col("dl") > 0).agg(
-        F.count("*").alias("n"), F.sum("dl").alias("t")
-    ).collect()[0]
-    n_docs = int(crow["n"] or 0)
-    total_len = int(crow["t"] or 0)
-    token_df = (
-        stats.filter(F.size("tf_tokens") > 0)
-        .select(F.explode("tf_tokens").alias("token"))
-        .groupBy("token")
-        .count()
-    )
-    # The literal idf map is only safe for a bounded vocabulary: a
-    # phrase_prefix query's candidate set is every distinct corpus token
-    # with the prefix, and inlining that into the plan (and the driver)
-    # does not scale.  Probe with limit(N+1) — if the vocabulary exceeds
-    # the cap, compose via a relational join on the df frame instead.
-    df_rows = token_df.limit(_MAX_IDF_LITERALS + 1).collect()
-    matched = stats.filter("matched")
-    if n_docs == 0 or not df_rows:  # no postings → no matched rows either
-        return matched.select(
-            "doc_id",
-            F.lit(None).cast("double").alias("score"),
-            "n_spans",
-            "payload_score",
-            F.lit(None).cast("double").alias("similarity"),
-        )
-    avgdl = total_len / n_docs
-    if len(df_rows) > _MAX_IDF_LITERALS:
-        return _compose_from_stats_join(
-            matched, token_df, n_docs, avgdl, boost
-        )
-    idf_map = F.create_map(
-        *[
-            c
-            for r in df_rows
-            for c in (
-                F.lit(r["token"]),
-                F.lit(
-                    math.log(
-                        1.0
-                        + (n_docs - int(r["count"]) + 0.5)
-                        / (int(r["count"]) + 0.5)
-                    )
-                ),
-            )
-        ]
-    )
-    dl_d = F.col("dl").cast("double")
-    similarity = F.aggregate(
-        F.arrays_zip("tf_tokens", "tf_counts"),
-        F.lit(0.0),
-        lambda acc, z: acc
-        + F.element_at(idf_map, z["tf_tokens"])
-        * (
-            z["tf_counts"].cast("double")
-            * F.lit(K1 + 1.0)
-            / (
-                z["tf_counts"].cast("double")
-                + F.lit(K1)
-                * (F.lit(1.0 - B) + F.lit(B) * dl_d / F.lit(avgdl))
-            )
-        ),
-    )
-    return (
-        matched.withColumn("similarity", similarity)
-        .withColumn(
-            "score",
-            F.col("payload_score") * F.col("similarity") * F.lit(boost),
-        )
-        .select("doc_id", "score", "n_spans", "payload_score", "similarity")
-    )
-
-
-def _lucene_idf_terms(
-    terms: list, dfs: dict[str, int], prefix: bool
-) -> list[str]:
-    """The distinct term set Lucene's SpanWeight collects for the idf sum
-    (``extractTermStates`` dedups into a Map<Term, TermStates>; terms
-    absent from the corpus contribute no TermStatistics).  For
-    phrase_prefix the last slot expands to every corpus token with the
-    prefix ("blended" statistics over the rewritten SpanOr); multi-phrase
-    slots contribute each alternative."""
-    fixed = terms[:-1] if prefix else terms
-    out = list(dict.fromkeys(_flat_terms(fixed)))
-    if prefix:
-        p = terms[-1]
-        out.extend(
-            t for t in sorted(dfs) if t.startswith(p) and t not in out
-        )
-    return [t for t in out if dfs.get(t, 0) > 0]
-
-
-def _compose_from_stats_lucene(
-    stats: DataFrame, terms: list, boost: float, prefix: bool = False
-) -> DataFrame:
-    """``similarity='lucene'``: compose the RECONSTRUCTED ES-7.x Lucene
-    span similarity (see ``bm25.lucene_legacy_span_similarity`` and
-    FIXTURES.md §6) from the single-pass stats frame — the engine then
-    reproduces the reference's published end-to-end scores:
-
-    - freq: the kernel's float32 sloppy span frequency (Σ 1/(1+gaps));
-    - dl: overlap-discounted token count, quantized to Lucene's 4-bit
-      SmallFloat norm (byte4 roundtrip with the 24-value free-value
-      offset — exact below 40, 24 + top-4-bits of (dl-24) above);
-    - avgdl: sumTotalTermFreq/docCount (FULL token count — Lucene's dl
-      and avgdl are structurally inconsistent on lattice fields);
-    - idf/weight: corpus constants — ONE eager tiny statistics job over
-      the persisted stats frame collects k df values + 2 scalars (like
-      the IVF literal centroids), then they become plan-time literals;
-    - every composition step cast through float32, matching Lucene's
-      association order.
-    """
-    df_rows = (
-        stats.filter(F.size("tf_tokens") > 0)
-        .select(F.explode("tf_tokens").alias("token"))
-        .groupBy("token")
-        .count()
-        .collect()
-    )
-    dfs = {r["token"]: int(r["count"]) for r in df_rows}
-    weight, avgdl = _lucene_corpus_consts(
-        stats.select("doc_id", "dl"),
-        dfs,
-        _lucene_idf_terms(terms, dfs, prefix),
-        boost,
-    )
-    sim = _lucene_sim_sql(weight, avgdl)
-    return (
-        stats.filter("matched")
-        .withColumn("similarity", F.expr(sim).cast("double"))
-        .withColumn(
-            "score",
-            F.expr(f"cast(cast(payload_score as float) * {sim} as float)")
-            .cast("double"),
-        )
-        .select("doc_id", "score", "n_spans", "payload_score", "similarity")
-    )
-
-
-def _lucene_sim_sql(weight: float, avgdl: float) -> str:
-    """Float32 Lucene-similarity SQL over per-row ``sloppy_freq`` /
-    ``dl_norm`` columns with plan-time ``weight``/``avgdl`` literals.  The
-    `d` suffixes matter: bare fractional literals parse as DECIMAL in
-    Spark SQL and would silently turn the norm into 6-digit decimal math."""
-    from full_lattice_search_spark.operators.bm25 import B, K1
-
-    # Lucene SmallFloat.byte4ToInt(intToByte4(dl_norm)): exact below 24
-    # (NUM_FREE_VALUES = 255 - longToInt4(Integer.MAX_VALUE) = 24 small
-    # values get dedicated bytes), else 24 + top-4-significant-bits of
-    # (dl_norm - 24).  A plain top-4-bit truncation is wrong for e.g.
-    # 21 (->20) and 50 (->48): Lucene keeps both exact.
-    s_expr = (
-        "greatest(cast(floor(log2(greatest(dl_norm - 24, 1))) as int)"
-        " - 3, 0)"
-    )
-    dlq = (
-        f"(case when dl_norm < 24 then dl_norm else 24 + "
-        f"shiftleft(shiftright(dl_norm - 24, {s_expr}), {s_expr}) end)"
-    )
-    norm = f"({K1!r}d * (1.0d - {B!r}d + {B!r}d * {dlq} / {avgdl!r}d))"
-    tfn = f"cast(sloppy_freq / (sloppy_freq + {norm}) as float)"
-    return f"cast(cast({weight!r}d as float) * {tfn} as float)"
-
-
-def _lucene_corpus_consts(
-    doclen: DataFrame, dfs: dict[str, int], terms: list[str], boost: float
-) -> tuple[float, float]:
-    """(weight, avgdl) literals from corpus statistics, float32-composed
-    exactly like ``lucene_legacy_span_similarity``."""
-    import math
-
-    from full_lattice_search_spark.operators.bm25 import K1
-
-    crow = doclen.filter(F.col("dl") > 0).agg(
-        F.count("*").alias("n"), F.sum("dl").alias("t")
-    ).collect()[0]
-    n_docs = int(crow["n"] or 0)
-    total_len = int(crow["t"] or 0)
-    if n_docs == 0:
-        return 0.0, 1.0
-    idf = np.float32(
-        sum(
-            math.log(
-                1.0 + (n_docs - dfs.get(t, 0) + 0.5) / (dfs.get(t, 0) + 0.5)
-            )
-            for t in terms
-        )
-    )
-    weight = float(np.float32(np.float32(boost * (K1 + 1.0)) * idf))
-    avgdl = float(np.float32(total_len / n_docs))
-    return weight, avgdl
-
-
-def _compose_lucene_tokens(
-    hits: DataFrame,
-    tokens: DataFrame,
+    cand: DataFrame,
     terms: list,
-    boost: float,
-    doclen: DataFrame | None = None,
-    prefix: bool = False,
-    vocab: DataFrame | None = None,
+    params: MatchLatticeParams,
+    prefix: bool,
+    doclen: DataFrame | None,
+    vocab: DataFrame | None,
 ) -> DataFrame:
-    """``similarity='lucene'`` for the token-table path: corpus statistics
-    (dl, overlap-discounted dl_norm, per-term df) come from the token
-    table itself — the index-statistics analog; one eager tiny job turns
-    them into plan-time literals, then the float32 composition joins the
-    per-doc dl_norm onto the freq-carrying hits.
+    """Token-path stats producer: the per-doc frame ``compose_similarity``
+    reads, built from the hits, document lengths and candidate-postings tf
+    — the index-statistics analog.
 
-    ``doclen``: precomputed (doc_id, dl, dl_norm) statistics table (the
+    ``doclen``: precomputed (doc_id, dl[, dl_norm]) statistics table (the
     materialized index writes one).  Required when ``tokens`` is a pruned
     view: per-doc lengths can't be recovered from pruned postings, while
     per-term df CAN (a term's postings all live in its own bucket).
 
     ``vocab``: precomputed (token, df) term dictionary (the index writes
     one at ``{path}_vocab``).  When given, dfs come from it instead of a
-    postings aggregation — required for ``prefix`` over a pruned view
-    (the expansion vocabulary spans buckets the view may not include),
-    and cheaper everywhere (the dictionary is pre-aggregated and
+    postings aggregation — required for a lucene ``prefix`` over a pruned
+    view (the expansion vocabulary spans buckets the view may not
+    include), and cheaper everywhere (the dictionary is pre-aggregated and
     token-sorted, so the prefix filter is a parquet range scan)."""
-    if doclen is None:
-        doclen = tokens.groupBy(
-            F.col("doc_id").cast("string").alias("doc_id")
-        ).agg(
-            F.count("*").alias("dl"),
-            F.sum((F.col("pos_inc") > 0).cast("long")).alias("dl_norm"),
+    lucene = params.similarity == "lucene"
+    if lucene and prefix and doclen is not None and vocab is None:
+        raise ValueError(
+            "similarity='lucene' with phrase_prefix over a pruned "
+            "index view (doclen passed) needs the index's vocabulary "
+            "table to supply the expansion set's document "
+            "frequencies — pass vocab (write_token_index writes it "
+            "at {path}_vocab), or use match_lattice_indexed which "
+            "wires it automatically"
         )
-    elif "dl_norm" not in doclen.columns:
+    if doclen is None:
+        # overlap-discounted length only for lucene: Lucene norms don't
+        # count posinc=0 lattice alternatives
+        dl_norm = F.sum((F.col("pos_inc") > 0).cast("long")).alias("dl_norm")
+        doclen = tokens.groupBy("doc_id").agg(
+            F.count("*").alias("dl"), *([dl_norm] if lucene else [])
+        )
+    elif lucene and "dl_norm" not in doclen.columns:
         raise ValueError(
             "similarity='lucene' needs a doclen table with a dl_norm "
             "column (overlap-discounted length); rebuild the token index "
             "with this version's write_token_index"
         )
-    else:
-        doclen = doclen.select(
-            F.col("doc_id").cast("string").alias("doc_id"), "dl", "dl_norm"
-        )
-    df_pred = F.col("token").isin(_flat_terms(terms))
-    if prefix:
-        df_pred = df_pred | F.col("token").startswith(terms[-1])
+    doclen = doclen.select(
+        F.col("doc_id").cast("string").alias("doc_id"),
+        "dl",
+        *(["dl_norm"] if lucene else []),
+    )
+    tf = _tf_arrays(cand)
+    frame = hits.withColumnRenamed("score", "payload_score").join(
+        doclen, "doc_id"
+    )
+    if not lucene:
+        frame = frame.join(tf, "doc_id")
     if vocab is not None:
-        df_rows = vocab.filter(df_pred).select("token", "df").collect()
-    else:
-        df_rows = (
-            tokens.filter(df_pred)
-            .groupBy("token")
-            .agg(F.countDistinct("doc_id").alias("df"))
-            .collect()
-        )
-    dfs = {r["token"]: int(r["df"]) for r in df_rows}
-    weight, avgdl = _lucene_corpus_consts(
-        doclen, dfs, _lucene_idf_terms(terms, dfs, prefix), boost
+        vocab = vocab.filter(_candidate_pred(terms, prefix))
+    return compose_similarity(
+        frame, doclen, tf, terms, params.similarity, float(params.boost),
+        prefix=prefix, vocab=vocab,
     )
-    sim = _lucene_sim_sql(weight, avgdl)
-    scored = (
-        hits.withColumnRenamed("score", "payload_score")
-        .join(doclen.select("doc_id", "dl_norm"), "doc_id")
-        .withColumn("similarity", F.expr(sim).cast("double"))
-        .withColumn(
-            "score",
-            F.expr(f"cast(cast(payload_score as float) * {sim} as float)")
-            .cast("double"),
-        )
-    )
-    front = ["doc_id", "score", "n_spans", "payload_score", "similarity"]
-    # explain arrays (span_start/span_end/span_score) ride along; the
-    # composition internals (dl_norm, sloppy_freq) are dropped — freq is
-    # recomputable from the span boundaries
-    rest = [
-        c
-        for c in scored.columns
-        if c not in front and c not in ("dl_norm", "sloppy_freq")
-    ]
-    return scored.select(*front, *rest)
 
 
 def match_lattice(
@@ -1063,11 +759,12 @@ def match_lattice(
     The JVM substring prefilter is skipped on this path because corpus
     statistics are defined over every document, matched or not; the
     matcher's own term filter makes non-candidate docs nearly free.
-    ``explain=True`` composed scoring keeps the two-pass formulation (the
-    explain arrays don't flow through the stats schema).  Deployments at
-    scale can still prefer the materialized token index
-    (``match_lattice_tokens``), where statistics come from the same table
-    the matcher reads.
+    ``explain=True`` with composed scoring runs as
+    ``match_lattice_tokens`` over ``lattice_tokenize(docs)`` (the explain
+    arrays don't flow through the stats schema): same scores, one
+    composition core.  Deployments at scale can still prefer the
+    materialized token index (``match_lattice_tokens``), where statistics
+    come from the same table the matcher reads.
     """
     config = config or LatticeConfig()
     params = params or MatchLatticeParams()
@@ -1078,12 +775,9 @@ def match_lattice(
             "include_span_score=False for streaming matches (see "
             "streaming/stream.py:match_stream)"
         )
-    terms, slop = _resolve(query, config, params, query_analyzer)
-    if phrase_prefix and terms and not isinstance(terms[-1], str):
-        raise ValueError(
-            "phrase_prefix needs a single-term final slot, got "
-            f"alternatives {terms[-1]!r}"
-        )
+    terms, slop = _resolve(
+        query, config, params, query_analyzer, phrase_prefix
+    )
 
     spark = docs.sparkSession
     if not terms:
@@ -1092,6 +786,14 @@ def match_lattice(
         return _zero_terms_hits(
             docs.select(F.col(doc_id_col).cast("string").alias("doc_id")),
             params,
+        )
+
+    if params.include_span_score and explain:
+        return match_lattice_tokens(
+            lattice_tokenize(docs, config, doc_id_col, spans_col),
+            query, config, params, top_k=top_k, dtype=dtype,
+            phrase_prefix=phrase_prefix, query_analyzer=query_analyzer,
+            explain=True, assume_doc_clustered=True,
         )
 
     narrow = docs.select(
@@ -1103,15 +805,11 @@ def match_lattice(
         params.payload_length_norm_factor
     )
 
-    if params.include_span_score and not explain:
+    if params.include_span_score:
         # SINGLE-PASS composed scoring: the same kernel that matches also
         # emits each document's dl and per-query-term tf, and BM25 is
         # composed from those columns (see docstring).  No prefilter —
         # corpus statistics cover every document.
-        from pyspark import StorageLevel
-
-        from full_lattice_search_spark.schema import SPAN_STATS_SCHEMA
-
         want_lucene = params.similarity == "lucene"
 
         def run_stats(
@@ -1178,19 +876,14 @@ def match_lattice(
                     ]
                 ]
 
-        stats = narrow.mapInPandas(
-            run_stats, schema=SPAN_STATS_SCHEMA
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _COMPOSED_STATS_CACHE.append(stats)  # see composed_cache_scope
-        if want_lucene:
-            hits = _compose_from_stats_lucene(
-                stats, terms, float(params.boost), prefix=phrase_prefix
-            )
-        else:
-            hits = _compose_from_stats(stats, float(params.boost))
-        if top_k is not None:
-            hits = hits.orderBy(F.desc("score"), "doc_id").limit(top_k)
-        return hits
+        stats = scoped_persist(
+            narrow.mapInPandas(run_stats, schema=SPAN_STATS_SCHEMA)
+        )  # see composed_cache_scope
+        hits = compose_similarity(
+            stats.filter("matched"), stats, stats, terms, params.similarity,
+            float(params.boost), prefix=phrase_prefix,
+        )
+        return _finish(hits, top_k)
 
     # JVM-side candidate prefilter: ONE substring probe on the longest query
     # term (a superset of token equality — the bare token prefixes each pipe
@@ -1221,47 +914,18 @@ def match_lattice(
             F.lower(F.concat_ws(" ", F.col("values"))).contains(probe)
         )
 
-    want_lucene = (
-        params.include_span_score and params.similarity == "lucene"
-    )
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             toks = tokenize_pandas(pdf["doc_id"], pdf["values"], config)
             yield match_tokens_pandas(
                 toks, terms, slop, in_order, pf, ln, dtype,
                 prefix_last=phrase_prefix, explain=explain,
-                with_freq=want_lucene,
             )
 
-    schema = _hits_output_schema(explain, with_freq=want_lucene)
-    hits = narrow.mapInPandas(run, schema=schema)
-    if params.include_span_score:
-        # only reachable with explain=True (the default composed path is
-        # the single-pass kernel above): two-pass so the explain arrays
-        # survive composition
-        from full_lattice_search_spark.functions.tokenizer import (
-            lattice_tokenize,
-        )
-
-        tokens = lattice_tokenize(docs, config, doc_id_col=doc_id_col,
-                                  spans_col=spans_col)
-        if want_lucene:
-            hits = _compose_lucene_tokens(
-                hits, tokens, terms, float(params.boost),
-                prefix=phrase_prefix,
-            )
-        else:
-            hits = _compose_score(
-                hits, tokens, terms, params, phrase_prefix
-            )
-    elif params.boost != 1.0:
-        hits = hits.withColumn(
-            "score", F.col("score") * F.lit(float(params.boost))
-        )
-    if top_k is not None:
-        hits = hits.orderBy(F.desc("score"), "doc_id").limit(top_k)
-    return hits
+    hits = narrow.mapInPandas(
+        run, schema=_hits_output_schema(explain, with_freq=False)
+    )
+    return _finish(hits, top_k, float(params.boost))
 
 
 def match_lattice_tokens(
@@ -1293,12 +957,9 @@ def match_lattice_tokens(
     """
     config = config or LatticeConfig()
     params = params or MatchLatticeParams()
-    terms, slop = _resolve(query, config, params, query_analyzer)
-    if phrase_prefix and terms and not isinstance(terms[-1], str):
-        raise ValueError(
-            "phrase_prefix needs a single-term final slot, got "
-            f"alternatives {terms[-1]!r}"
-        )
+    terms, slop = _resolve(
+        query, config, params, query_analyzer, phrase_prefix
+    )
     spark = tokens.sparkSession
     if not terms:
         if params.zero_terms_query == "none":
@@ -1310,31 +971,12 @@ def match_lattice_tokens(
     want_lucene = (
         params.include_span_score and params.similarity == "lucene"
     )
-    if want_lucene:
-        if phrase_prefix and doclen is not None and vocab is None:
-            raise ValueError(
-                "similarity='lucene' with phrase_prefix over a pruned "
-                "index view (doclen passed) needs the index's vocabulary "
-                "table to supply the expansion set's document "
-                "frequencies — pass vocab (write_token_index writes it "
-                "at {path}_vocab), or use match_lattice_indexed which "
-                "wires it automatically"
-            )
-        if doclen is not None and "dl_norm" not in doclen.columns:
-            raise ValueError(
-                "similarity='lucene' needs a doclen table with a dl_norm "
-                "column; rebuild the token index with this version's "
-                "write_token_index"
-            )
 
     in_order, pf, ln = params.in_order, params.payload_function, (
         params.payload_length_norm_factor
     )
 
-    pred = F.col("token").isin(_flat_terms(terms))
-    if phrase_prefix:
-        pred = pred | F.col("token").startswith(terms[-1])
-    cand = tokens.filter(pred).select(
+    cand = tokens.filter(_candidate_pred(terms, phrase_prefix)).select(
         "doc_id", "token", "abs_pos", "score", "seq"
     )
 
@@ -1382,22 +1024,12 @@ def match_lattice_tokens(
 
     schema = _hits_output_schema(explain, with_freq=want_lucene)
     hits = cand.mapInPandas(run, schema=schema)
-    if want_lucene:
-        hits = _compose_lucene_tokens(
-            hits, tokens, terms, float(params.boost), doclen=doclen,
-            prefix=phrase_prefix, vocab=vocab,
+    if params.include_span_score:
+        hits = _compose_tokens(
+            hits, tokens, cand, terms, params, phrase_prefix, doclen, vocab
         )
-    elif params.include_span_score:
-        hits = _compose_score(
-            hits, tokens, terms, params, phrase_prefix, doclen=doclen
-        )
-    elif params.boost != 1.0:
-        hits = hits.withColumn(
-            "score", F.col("score") * F.lit(float(params.boost))
-        )
-    if top_k is not None:
-        hits = hits.orderBy(F.desc("score"), "doc_id").limit(top_k)
-    return hits
+        return _finish(hits, top_k)
+    return _finish(hits, top_k, float(params.boost))
 
 
 def exists_lattice(
@@ -1512,12 +1144,7 @@ def match_lattice_many(
     zero_qids: list[str] = []
     union_terms: set[str] = set()
     for qid, qtext in queries:
-        # a list-shaped query is a multi-phrase slot list (same contract
-        # as match_lattice)
-        if isinstance(qtext, str):
-            terms = analyze_query(qtext, config)
-        else:
-            terms = analyze_multi_phrase(qtext, config)
+        terms = _analyze(qtext, config)
         if not terms:
             zero_qids.append(qid)
             continue

@@ -33,7 +33,10 @@ from full_lattice_search_spark.operators.dedup import (
     simhash_signature,
 )
 from full_lattice_search_spark.operators.extract import extract_spans
-from full_lattice_search_spark.operators.match import match_lattice_tokens
+from full_lattice_search_spark.operators.match import (
+    match_lattice_tokens,
+    scoped_persist,
+)
 from full_lattice_search_spark.operators.multimodal import media_features
 from full_lattice_search_spark.operators.similarity import (
     brute_force_topk,
@@ -322,7 +325,7 @@ c{j} AS (
     # idf over DISTINCT terms (Lucene SpanWeight dedups term states); a
     # phrase_prefix last slot contributes every corpus token with the
     # prefix instead of itself ("blended" statistics over the rewritten
-    # SpanOr — mirrors operators/match.py:_lucene_idf_terms)
+    # SpanOr — mirrors operators/bm25.py:_lucene_idf_terms)
     fixed = list(dict.fromkeys(terms[:-1] if prefix else terms))
     # each fixed term contributes ONLY when corpus-present (df > 0) —
     # mirrors _lucene_idf_terms dropping absent terms (a df=0 term would
@@ -351,7 +354,7 @@ c{j} AS (
     idf_sum = " + ".join(idf_parts)
     # SmallFloat.intToByte4 roundtrip: exact < 24 (free values), else
     # 24 + top-4-significant-bits of (dl_norm - 24) — mirrors
-    # operators/match.py:_lucene_sim_sql
+    # operators/bm25.py:_lucene_sim_sql
     dlq_s = (
         "greatest(CAST(floor(log2(greatest(dl_norm - 24, 1))) AS INT)"
         " - 3, 0)"
@@ -976,12 +979,11 @@ def q_match_span_score(spark, sf_dir):
     persisted once and feed all three subtrees: ONE tokenize execution
     per run instead of four.  Same operators, same floats — the persisted
     frame is an intra-query intermediate, recomputed from parquet on
-    every invocation."""
+    every invocation and released by ``composed_cache_scope``."""
     toks = _tokens(spark, sf_dir, where=_contains_probe(["table"]))
-    cand = (
+    cand = scoped_persist(
         toks.filter(F.col("token").isin(["table"]))
         .select("doc_id", "token", "abs_pos", "score", "seq")
-        .persist()
     )
     hits = match_lattice_tokens(
         cand,
@@ -1520,10 +1522,9 @@ def q_bm25(spark, sf_dir):
     # feeding both the tf and df aggregations: one tokenize execution
     # instead of three (see q_match_span_score)
     toks = _tokens(spark, sf_dir, where=_contains_probe([["table", "stream"]]))
-    cand = (
+    cand = scoped_persist(
         toks.filter(F.col("token").isin(["table", "stream"]))
         .select("doc_id", "token")
-        .persist()
     )
     return bm25_scores(
         cand, ["table", "stream"], round_to=6,

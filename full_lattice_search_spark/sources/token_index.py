@@ -23,7 +23,8 @@ from pyspark.sql import functions as F
 from full_lattice_search_spark.config import LatticeConfig, MatchLatticeParams
 from full_lattice_search_spark.functions.tokenizer import lattice_tokenize
 from full_lattice_search_spark.operators.match import (
-    analyze_query,
+    _analyze,
+    _flat_terms,
     match_lattice_tokens,
 )
 
@@ -105,30 +106,27 @@ def match_lattice_indexed(
 ) -> DataFrame:
     """match_lattice over the materialized index: plan-time bucket
     resolution → partition pruning → rowgroup pushdown → span DP.
+    ``query`` is a text or a multi-phrase slot list, as in match_lattice.
 
     ``phrase_prefix``: the last term matches as a prefix.  Its expansion
     tokens hash to arbitrary buckets, so the bucket list is resolved from
     the index's vocabulary table (``{path}_vocab`` — tiny, token-sorted,
     prefix-range-pruned) and unioned with the fixed terms' buckets; the
-    same vocab supplies the expansion document frequencies for the
-    ``similarity='lucene'`` idf blend, keeping the postings scan pruned.
+    same vocab supplies the candidate document frequencies (the
+    ``similarity='lucene'`` idf blend needs the whole expansion set),
+    keeping the postings scan pruned.
     The bucket list collect is bounded by ``n_token_buckets`` values."""
     config = config or LatticeConfig()
     params = params or MatchLatticeParams()
-    terms = analyze_query(query, config)
+    terms = _analyze(query, config)
     tokens = spark.read.parquet(index_path)
     vocab = None
     if phrase_prefix and terms:
         vocab = spark.read.parquet(f"{index_path}_vocab")
     if terms:
         # resolve buckets on the driver with the same hash the writer used
-        flat = [
-            t
-            for slot in terms
-            for t in (slot if isinstance(slot, list) else [slot])
-        ]
         bucket_df = spark.createDataFrame(
-            [(t,) for t in flat], "token string"
+            [(t,) for t in _flat_terms(terms)], "token string"
         ).select(token_bucket_col("token", n_token_buckets).alias("b"))
         buckets = {r["b"] for r in bucket_df.collect()}
         if vocab is not None:

@@ -89,6 +89,7 @@ def test_idf_literal_cap_falls_back_to_join(spark, monkeypatch):
     relational join on the df frame — same scores (float64 summation
     order aside).  A short prefix expands to many candidate tokens, which
     is exactly the case the literal map cannot absorb at scale."""
+    import full_lattice_search_spark.operators.bm25 as bm25
     import full_lattice_search_spark.operators.match as m
     from full_lattice_search_spark.datagen import synth_documents
 
@@ -108,7 +109,7 @@ def test_idf_literal_cap_falls_back_to_join(spark, monkeypatch):
         }
 
     via_literals = run()
-    monkeypatch.setattr(m, "_MAX_IDF_LITERALS", 1)
+    monkeypatch.setattr(bm25, "_MAX_IDF_LITERALS", 1)
     via_join = run()
     assert via_join == via_literals
     assert len(via_join) > 0
@@ -223,9 +224,9 @@ def test_multi_phrase_through_search_facade(spark):
 
 def test_composed_cache_scope_releases_stats_frames(spark):
     """The composed doc-scan path persists one O(docs) stats frame per
-    query; composed_cache_scope must leave NOTHING registered in Spark's
-    cache manager after the scope exits (scoped unpersist, not
-    clearCache)."""
+    query, the composed registry entries their candidate postings;
+    composed_cache_scope must leave NOTHING registered in Spark's cache
+    manager after the scope exits (scoped unpersist, not clearCache)."""
     from full_lattice_search_spark import (
         composed_cache_scope,
         release_composed_caches,
@@ -258,4 +259,16 @@ def test_composed_cache_scope_releases_stats_frames(spark):
     ).count()
     assert not cache_mgr.isEmpty()
     assert release_composed_caches() >= 1
+    assert cache_mgr.isEmpty()
+
+    # the registry's composed entries persist their candidate postings
+    # through the same scoped helper
+    from test_oracles_smoke import SF
+
+    from full_lattice_search_spark.plans.queries import QUERIES
+
+    with composed_cache_scope():
+        for name in ("match_span_score", "bm25"):
+            assert QUERIES[name](spark, SF).collect()
+        assert not cache_mgr.isEmpty()
     assert cache_mgr.isEmpty()

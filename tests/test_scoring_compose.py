@@ -71,16 +71,29 @@ def test_include_span_score_multiplies_bm25(docs):
     assert composed["doc1"]["similarity"] > composed["doc2"]["similarity"]
 
 
-def test_both_paths_compose_identically(spark, docs):
+QUERY_SHAPES = {
+    "term": ("brown", False),
+    "phrase": ("quick brown", False),
+    "slots": ([["quick", "now"], "brown"], False),
+    "prefix": ("brown co", True),
+}
+
+
+@pytest.mark.parametrize("shape", list(QUERY_SHAPES))
+@pytest.mark.parametrize("similarity", ["engine", "lucene"])
+def test_both_paths_compose_identically(spark, docs, similarity, shape):
+    query, prefix = QUERY_SHAPES[shape]
+    params = MatchLatticeParams(similarity=similarity)
     toks = lattice_tokenize(docs, LatticeConfig()).cache()
     via_tokens = _by_doc(
-        match_lattice_tokens(toks, "brown", LatticeConfig(),
-                             MatchLatticeParams()).collect()
+        match_lattice_tokens(toks, query, LatticeConfig(), params,
+                             phrase_prefix=prefix).collect()
     )
     via_docs = _by_doc(
-        match_lattice(docs, "brown", LatticeConfig(),
-                      MatchLatticeParams()).collect()
+        match_lattice(docs, query, LatticeConfig(), params,
+                      phrase_prefix=prefix).collect()
     )
+    assert via_docs
     assert set(via_tokens) == set(via_docs)
     for d in via_tokens:
         assert via_tokens[d]["score"] == pytest.approx(
@@ -160,3 +173,23 @@ def test_explain_matches_plain_scores(docs):
         # sum fold: doc score is the (float32) sum of span scores
         assert float(np.sum(np.asarray(e["span_score"], dtype=np.float32))) \
             == pytest.approx(e["score"], rel=1e-5)
+
+
+def test_explain_composed_matches_plain_scores(docs):
+    """Engine similarity: the explain=True composed plan scores exactly
+    like the non-explain plan, and carries the span breakdown."""
+    plain = _by_doc(
+        match_lattice(docs, "brown", LatticeConfig(),
+                      MatchLatticeParams()).collect()
+    )
+    explained = _by_doc(
+        match_lattice(docs, "brown", LatticeConfig(), MatchLatticeParams(),
+                      explain=True).collect()
+    )
+    assert set(explained) == set(plain)
+    for d, e in explained.items():
+        assert e["score"] == pytest.approx(plain[d]["score"], rel=1e-12)
+        assert e["similarity"] == pytest.approx(
+            plain[d]["similarity"], rel=1e-12
+        )
+        assert len(e["span_start"]) == e["n_spans"] == plain[d]["n_spans"]

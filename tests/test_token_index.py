@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 
 from full_lattice_search_spark.config import LatticeConfig, MatchLatticeParams
-from full_lattice_search_spark.datagen import synth_documents
+from full_lattice_search_spark.datagen import VOCAB, synth_documents
 from full_lattice_search_spark.operators.match import match_lattice
 from full_lattice_search_spark.sources.token_index import (
     match_lattice_indexed,
@@ -22,17 +22,24 @@ def index_path(spark, tmp_path_factory):
     return path
 
 
-def test_indexed_match_parity_with_scan(spark, index_path):
+# a multi-phrase slot list: (the | how) quick
+SLOTS = [[str(VOCAB[0]), str(VOCAB[9])], str(VOCAB[1])]
+
+
+@pytest.mark.parametrize(
+    "query", ["the quick", SLOTS], ids=["text", "slots"]
+)
+def test_indexed_match_parity_with_scan(spark, index_path, query):
     docs = synth_documents(spark, 60, seed=13, mega_every=0)
     params = MatchLatticeParams(slop=3)
     direct = {
         (r["doc_id"], round(r["score"], 6), r["n_spans"])
-        for r in match_lattice(docs, "the quick", LatticeConfig(), params).collect()
+        for r in match_lattice(docs, query, LatticeConfig(), params).collect()
     }
     indexed = {
         (r["doc_id"], round(r["score"], 6), r["n_spans"])
         for r in match_lattice_indexed(
-            spark, index_path, "the quick", LatticeConfig(), params,
+            spark, index_path, query, LatticeConfig(), params,
             n_token_buckets=16,
         ).collect()
     }
