@@ -15,6 +15,8 @@ All computation is declared through the DataFrame API so Catalyst picks the
 physical strategy; Python appears only inside Arrow-batched pandas UDFs.
 """
 
+from pyspark import TaskContext
+
 from full_lattice_search_spark.api import parse_match_lattice, search
 from full_lattice_search_spark.config import LatticeConfig, MatchLatticeParams
 from full_lattice_search_spark.functions.tokenizer import (
@@ -40,3 +42,10 @@ __all__ = [
 ]
 
 __version__ = "0.1.0"
+
+if TaskContext.get() is not None:
+    # inside a Python worker, unpickling an engine UDF: stop every later
+    # task's setup from re-reading the zip archives (see worker.py)
+    from full_lattice_search_spark.worker import install_zip_guard
+
+    install_zip_guard()

@@ -366,10 +366,8 @@ def _extract_batch_arrow(
         np.arange(len(di_k), dtype=np.int64) - starts[di_k]
     ).astype(np.int32)
 
-    out_text = ext["text"].to_numpy()[keep]
-    text_lens = np.array(
-        [len(t) if t is not None else 0 for t in out_text], dtype=np.int64
-    )
+    out_text = pa.array(ext["text"].to_numpy()[keep], pa.string())
+    text_lens = pc.fill_null(pc.utf8_length(out_text), 0).to_numpy()
     n_chars = np.bincount(di_k, weights=text_lens, minlength=n_docs).astype(
         np.int64
     )
@@ -377,7 +375,7 @@ def _extract_batch_arrow(
     struct = pa.StructArray.from_arrays(
         [
             pa.array(ext["kind"].to_numpy()[keep], pa.string()),
-            pa.array(out_text, pa.string()),
+            out_text,
             pa.array(ext["media_ref"].to_numpy()[keep], pa.string()),
             pa.array(new_offsets, pa.int32()),
         ],

@@ -44,10 +44,15 @@ def bucket_col(doc_id_col: str, n_buckets: int) -> F.Column:
 
 
 def completed_buckets(spark: SparkSession, checkpoint_dir: str) -> set[int]:
-    try:
-        ckpt = spark.read.schema(CHECKPOINT_SCHEMA).parquet(checkpoint_dir)
-    except Exception:
+    """Buckets marked ``done`` in the checkpoint table.  A missing table
+    means nothing is done; any other read error (a corrupt or unreadable
+    table) raises rather than silently re-running every bucket."""
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path(checkpoint_dir)
+    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if not fs.exists(path):
         return set()
+    ckpt = spark.read.schema(CHECKPOINT_SCHEMA).parquet(checkpoint_dir)
     rows = ckpt.filter(F.col("status") == "done").select("bucket").distinct()
     return {r["bucket"] for r in rows.collect()}
 
@@ -99,9 +104,9 @@ def _process_bucket_group(
             F.sum(F.col("n_spans") * cond).cast("long").alias(f"s{b}"),
             F.sum(F.col("n_text_chars") * cond).cast("long").alias(f"c{b}"),
         ]
-    out.observe(obs, aggs[0], *aggs[1:]).write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(output_dir)
+    out.observe(obs, aggs[0], *aggs[1:]).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("bucket").parquet(output_dir)
 
     wall = time.time() - t0
     got = obs.get  # blocks until the write action has fired the metrics
@@ -119,9 +124,9 @@ def _process_bucket_group(
             "wall_secs": float(wall),
         }
     )
-    spark.createDataFrame(metrics_pdf, CHECKPOINT_SCHEMA).write.mode(
-        "append"
-    ).parquet(checkpoint_dir)
+    # one file per group, not one per default-parallelism slice
+    ckpt_rows = spark.createDataFrame(metrics_pdf, CHECKPOINT_SCHEMA)
+    ckpt_rows.coalesce(1).write.mode("append").parquet(checkpoint_dir)
     return int(metrics_pdf["n_docs"].sum())
 
 
@@ -165,7 +170,6 @@ def run_extraction(
     size = buckets_per_job or len(pending)
     groups = [pending[i:i + size] for i in range(0, len(pending), size)]
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     n_docs = 0
     for group in groups:
         n_docs += _process_bucket_group(

@@ -11,6 +11,7 @@ import pytest
 from full_lattice_search_spark.config import LatticeConfig
 from full_lattice_search_spark.datagen import FIXTURE_TEXTS, synth_documents
 from full_lattice_search_spark.operators.extract import (
+    _extract_batch_arrow,
     extract_span_batch,
     extract_spans,
     extract_spans_salted,
@@ -63,6 +64,31 @@ def test_media_passthrough_and_empty_drop():
     assert list(out["keep"]) == [True, True, False, False]
     assert out["media_ref"][0] == "media://img/1"
     assert out["kind"][1] == "audio"
+
+
+def test_arrow_batch_counts_characters_not_bytes():
+    import pyarrow as pa
+
+    texts = [["café ☃", None, "  naïve  "], ["日本語"], []]
+    kinds = [["text", "image", "text"], ["text"], []]
+    medias = [[None, "media://img/1", None], [None], []]
+    offsets = [[0, 1, 2], [0], []]
+    rb = pa.RecordBatch.from_arrays(
+        [
+            pa.array(["a", "b", "c"]),
+            pa.array(kinds, pa.list_(pa.string())),
+            pa.array(texts, pa.list_(pa.string())),
+            pa.array(medias, pa.list_(pa.string())),
+            pa.array(offsets, pa.list_(pa.int32())),
+        ],
+        names=["doc_id", "kinds", "texts", "medias", "offsets"],
+    )
+    out = _extract_batch_arrow(rb, CFG, strict=False).to_pydict()
+    spans_text = [[s["text"] for s in spans] for spans in out["spans"]]
+    assert spans_text == [["café ☃", None, "naïve"], ["日本語"], []]
+    want = [sum(len(t) for t in doc if t is not None) for doc in spans_text]
+    assert want == [11, 3, 0]
+    assert out["n_text_chars"] == want
 
 
 def test_pdf_layout_parse_and_stub():

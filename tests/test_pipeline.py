@@ -147,3 +147,54 @@ def test_no_output_rescan_for_metrics(spark, dirs, monkeypatch):
     for r in ckpt.collect():
         want = per_bucket.get(r["bucket"], (0, 0))
         assert (r["n_docs"], r["n_spans"]) == (want[0], want[1] or 0)
+
+
+def test_run_leaves_session_overwrite_mode_alone(spark, dirs):
+    """The output write asks for dynamic partition overwrite per write; the
+    caller's session conf must read the same before and after a run."""
+    out_dir, ckpt_dir = dirs
+    key = "spark.sql.sources.partitionOverwriteMode"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "static")
+    try:
+        docs = synth_documents(spark, 20, seed=13, mega_every=0)
+        run_extraction(spark, docs, out_dir, ckpt_dir, n_buckets=2)
+        assert spark.conf.get(key).lower() == "static"
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+def test_completed_buckets_missing_dir_is_not_read(spark, tmp_path,
+                                                   monkeypatch):
+    import pyspark.sql.readwriter as rw
+
+    calls = []
+    monkeypatch.setattr(rw.DataFrameReader, "parquet",
+                        lambda self, *p, **kw: calls.append(p))
+    assert completed_buckets(spark, str(tmp_path / "never-written")) == set()
+    assert calls == []
+
+
+def test_completed_buckets_corrupt_table_raises(spark, tmp_path):
+    ckpt_dir = tmp_path / "ckpt"
+    ckpt_dir.mkdir()
+    (ckpt_dir / "part-00000-corrupt.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception):
+        completed_buckets(spark, str(ckpt_dir))
+
+
+def test_checkpoint_writes_one_file_per_group(spark, dirs):
+    import glob
+    import os
+
+    out_dir, ckpt_dir = dirs
+    docs = synth_documents(spark, 40, seed=17, mega_every=0)
+    m = run_extraction(spark, docs, out_dir, ckpt_dir, n_buckets=8,
+                       buckets_per_job=2)
+    assert m["buckets_processed"] == 8
+    files = glob.glob(os.path.join(ckpt_dir, "*.parquet"))
+    assert len(files) == 4, files
+    assert completed_buckets(spark, ckpt_dir) == set(range(8))
